@@ -378,15 +378,6 @@ object Bench {
     SuiteResult(timings, errors, probes, reruns, annotations)
   }
 
-  /** Untimed warmup: JVM + codegen + parquet-footer caches, so the
-    * alphabetically-first query doesn't absorb startup cost. Also warms
-    * the shared text kernels (regex tokenizer, portable md5, array
-    * HOFs) on a tiny slice: their first-use JIT costs multiple seconds
-    * and would otherwise land on whichever text query the alphabet
-    * puts first (measured: l11_decontam cold 8.9 s → 3.1 s once
-    * another query had JIT'd the same kernels). Steady-state
-    * throughput is what the 100 TB target cares about. Shared with
-    * [[Sweep]] so the two timing mains can't drift. */
   /** Wall seconds the last [[warmup]] spent building the one-time
     * DECLARED warehouse layouts (bucketed graph adjacencies + LSH band
     * table). Reported as `layout_build_sec` in the bench JSON so the
@@ -397,49 +388,65 @@ object Bench {
     * intermediate must extend this metric, not hide inside it. */
   private[graft] var layoutBuildSec: Double = 0.0
 
+  /** Untimed warmup: JVM + codegen + parquet-footer caches, so the
+    * alphabetically-first query doesn't absorb startup cost. Also warms
+    * the shared text kernels (regex tokenizer, portable md5, array
+    * HOFs) on a tiny slice: their first-use JIT costs multiple seconds
+    * and would otherwise land on whichever text query the alphabet
+    * puts first (measured: l11_decontam cold 8.9 s → 3.1 s once
+    * another query had JIT'd the same kernels). Steady-state
+    * throughput is what the 100 TB target cares about. Shared with
+    * [[Sweep]] so the two timing mains can't drift.
+    *
+    * Failures propagate: a swallowed layout-build failure would report
+    * `layout_build_sec` 0 and move the build into the first timed query. */
   private[graft] def warmup(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit =
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .limit(10000)
-        .groupBy("l_returnflag")
-        .agg(org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.col("l_quantity")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 2))))
-        .write.format("noop").mode("overwrite").save()
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/documents.parquet").limit(100)
-        .select(col("doc_id"), explode(expr(
-          s"""transform(${graft.queries.Qh.toksExpr},
-             |  t -> md5_prefix32(t, 0))""".stripMargin)).as("h"))
-        .groupBy("h").count()
-        .write.format("noop").mode("overwrite").save()
-      // One-time bucketed adjacency layouts: the graph family's
-      // DECLARED storage layout (a warehouse maintains it; the bench
-      // measures query steady state, not the build). r16 adjudication
-      // of the l13_bfs "in-suite 35% loss": alphabetically-first
-      // l13_bfs paid the whole pr_edges build in its first reading
-      // (9.6 s single-shot vs 1.35 s amortized at sf0.1), while every
-      // "standalone" comparison was a min-of-reps that amortized it —
-      // suite-order session state measured INNOCENT (a single-JVM
-      // before/after-suite A/B read 1.5-1.9 s pre vs 1.1-2.4 s post).
-      // Pre-building here makes in-suite and standalone the same
-      // steady-state measurement in Bench AND Sweep.
-      val layoutT0 = System.nanoTime()
-      graft.queries.Graph.edgeTable(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      graft.queries.Graph.edgeTableByDst(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      // The LSH band table is the same class of one-time declared
-      // storage layout (bucketed + sorted on the band key, maintained
-      // by a warehouse at ingest): without this, whichever l2_* decl
-      // the alphabet put first (l2_cc_star) absorbed the whole build
-      // in its first reading — the exact measurement artifact the r16
-      // graph pre-build closed for l13_bfs (r16 optimization round).
-      graft.queries.Dedup.bandTableDf(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      layoutBuildSec = (System.nanoTime() - layoutT0) / 1e9
-    } catch { case _: Throwable => () }
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
+    spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .limit(10000)
+      .groupBy("l_returnflag")
+      .agg(org.apache.spark.sql.functions.sum(
+        org.apache.spark.sql.functions.col("l_quantity")
+          .cast(org.apache.spark.sql.types.DecimalType(18, 2))))
+      .write.format("noop").mode("overwrite").save()
+    import org.apache.spark.sql.functions._
+    spark.read.parquet(s"$sfDir/documents.parquet").limit(100)
+      .select(col("doc_id"), explode(expr(
+        s"""transform(${graft.queries.Qh.toksExpr},
+           |  t -> md5_prefix32(t, 0))""".stripMargin)).as("h"))
+      .groupBy("h").count()
+      .write.format("noop").mode("overwrite").save()
+    // One-time bucketed adjacency layouts: the graph family's
+    // DECLARED storage layout (a warehouse maintains it; the bench
+    // measures query steady state, not the build). r16 adjudication
+    // of the l13_bfs "in-suite 35% loss": alphabetically-first
+    // l13_bfs paid the whole pr_edges build in its first reading
+    // (9.6 s single-shot vs 1.35 s amortized at sf0.1), while every
+    // "standalone" comparison was a min-of-reps that amortized it —
+    // suite-order session state measured INNOCENT (a single-JVM
+    // before/after-suite A/B read 1.5-1.9 s pre vs 1.1-2.4 s post).
+    // Pre-building here makes in-suite and standalone the same
+    // steady-state measurement in Bench AND Sweep.
+    val layoutT0 = System.nanoTime()
+    graft.queries.Graph.edgeTable(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    graft.queries.Graph.edgeTableByDst(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    // The LSH band table is the same class of one-time declared
+    // storage layout (bucketed + sorted on the band key, maintained
+    // by a warehouse at ingest): without this, whichever l2_* decl
+    // the alphabet put first (l2_cc_star) absorbed the whole build
+    // in its first reading — the exact measurement artifact the r16
+    // graph pre-build closed for l13_bfs (r16 optimization round).
+    graft.queries.Dedup.bandTableDf(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    layoutBuildSec = (System.nanoTime() - layoutT0) / 1e9
+  }
+
+  /** Generated classes compiled so far in this JVM: every codegen-cache
+    * miss compiles one and records its time in this histogram. */
+  private[graft] def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Locale.ROOT: a comma-decimal default locale would emit 1,234 and
     * make the JSON unparseable by the driver. */
@@ -461,6 +468,9 @@ object Bench {
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     val rowCounts = scala.collection.mutable.LinkedHashMap[String, Long]()
+    // generated classes each query compiled (codegen-cache misses); on a
+    // warm suite anything above 0 means the class cache is thrashing
+    val compiles = scala.collection.mutable.LinkedHashMap[String, Long]()
     val attempts = scala.collection.mutable.Map[String, Int]()
     // one timed execution of `name` (R10's progress surface: row counts
     // ride the plan via observe — CollectMetrics on the executors, no
@@ -471,12 +481,14 @@ object Bench {
       val attempt = attempts.getOrElse(name, 0) + 1
       attempts(name) = attempt
       val obs = new org.apache.spark.sql.Observation(s"bench_${name}_$attempt")
+      val compiles0 = codegenCompiles
       val t0 = System.nanoTime()
       fn(spark, sfDir)
         .observe(obs, org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("rows_out"))
         .write.format("noop").mode("overwrite").save()
       val s = (System.nanoTime() - t0) / 1e9
+      compiles(name) = codegenCompiles - compiles0
       rowCounts(name) = obs.get("rows_out").asInstanceOf[Long]
       // measurement hygiene (r16, OUTSIDE the timed region): drop the
       // query's leftover materialized intermediates (localCheckpoint /
@@ -500,6 +512,8 @@ object Bench {
       val sec = timings.getOrElse(k, 0.0)
       s""""${esc(k)}":${f3(if (sec > 0) n / sec else 0.0)}"""
     }.mkString("{", ",", "}")
+    val compilesJson = compiles.map { case (k, n) => s""""${esc(k)}":$n""" }
+      .mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
       .mkString("{", ",", "}")
     val total = timings.values.sum
@@ -519,7 +533,7 @@ object Bench {
     val sentinelJson =
       s"""{"probe_pin":${f3(probePinSeconds)},"probes":$probesJson,"n_suspect":$nSuspect,"breach_reruns":$rerunsJson,"annotations":$annotJson}"""
     val full =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"rows_per_sec":$rps,"errors":$errJson,"sentinel":$sentinelJson,"layout_build_sec":${f3(layoutBuildSec)},"n_ok":${timings.size},"n_err":${errors.size},"n_annot":${suite.annotations.size},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"rows_per_sec":$rps,"codegen_compiles":$compilesJson,"errors":$errJson,"sentinel":$sentinelJson,"layout_build_sec":${f3(layoutBuildSec)},"n_ok":${timings.size},"n_err":${errors.size},"n_annot":${suite.annotations.size},"sf":"$sfDir"}"""
     // Full per-query detail: to a file + an EARLY stdout line. The driver
     // keeps only the last ~2000 chars of stdout, so a ~5 KB line there can
     // never be parsed (r02/r03 both recorded parsed=null). Humans and

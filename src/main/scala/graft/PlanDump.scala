@@ -1,13 +1,46 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev tool: dump formatted physical plans for the headline queries to
-  * PLANS.md — the reviewed artifact behind the plan-shape assertions in
-  * PlanSpec. */
+/** Dev tool: dump formatted physical plans.
+  *
+  *   runMain graft.PlanDump
+  *     the headline queries to PLANS.md — the reviewed artifact behind
+  *     the plan-shape assertions in PlanSpec;
+  *   runMain graft.PlanDump <round> <dir> <tag> <name,name,…>
+  *     `.explain("formatted")` of the named queries over the fixture
+  *     tables in <dir> to plans/<round>/<name>_<tag>.txt, the artifacts
+  *     a round's plan claims are checked against.
+  */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = args match {
+    case Array(round, dir, tag, names) => dumpRound(round, dir, tag, names.split(",").toSeq)
+    case Array() => dumpHeadline()
+    case _ =>
+      sys.error("usage: PlanDump | PlanDump <round> <dir> <tag> <name,name,…>")
+  }
+
+  private def dumpRound(round: String, dir: String, tag: String, names: Seq[String]): Unit = {
+    val spark = Engine.session(s"graft-plandump-$round")
+    val out = Paths.get("plans", round)
+    Files.createDirectories(out)
+    names.foreach { name =>
+      try {
+        val p = SparkEntry.queries(name)(spark, dir)
+          .queryExecution.explainString(ExplainMode.fromString("formatted"))
+        Files.write(out.resolve(s"${name}_$tag.txt"),
+          (s"== $name ($tag, $dir) ==\n" + p).getBytes("UTF-8"))
+        println(s"[plandump-$round] wrote ${name}_$tag.txt")
+      } catch {
+        case NonFatal(e) => println(s"[plandump-$round] $name FAILED: ${e.getMessage}")
+      }
+    }
+    spark.stop()
+  }
+
+  private def dumpHeadline(): Unit = {
     val spark = Engine.session("graft-plandump")
     val dir = "/root/testdata/sf0.001"
 

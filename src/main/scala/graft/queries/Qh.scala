@@ -239,9 +239,10 @@ object Qh {
     * co-bucketed fact join (one construction site — a divergent copy
     * per module is how band-config bugs ship). computeIfAbsent
     * serializes concurrent builders (Verify runs decls 4-at-a-time; a
-    * double saveAsTable would race). The stale-location sweep clears
-    * this table's own leftover dir plus any same-prefix dir whose JVM
-    * is BOTH pid-dead and >1h old (the Qh.ioDir sweep contract). */
+    * double saveAsTable would race). The stale-location sweep, in the
+    * session's own `spark.sql.warehouse.dir`, clears this table's own
+    * leftover dir plus any same-prefix dir whose JVM is BOTH pid-dead
+    * and >1h old (the Qh.ioDir sweep contract). */
   def bucketedTable(
       spark: SparkSession, prefix: String, dir: String,
       nBuckets: Int, keys: Seq[String])(df: => DataFrame): DataFrame =
@@ -249,19 +250,17 @@ object Qh {
       val tbl =
         s"${prefix}_${java.lang.ProcessHandle.current().pid()}_${math.abs(dir.hashCode)}"
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
+      val warehouse = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
       val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-      Option(new java.io.File("/tmp/graft_warehouse").listFiles())
+      Option(new java.io.File(warehouse).listFiles())
         .getOrElse(Array.empty)
         .filter(f => f.getName == tbl ||
           (f.getName.startsWith(s"${prefix}_") &&
             f.lastModified() < cutoff &&
             f.getName.stripPrefix(s"${prefix}_").takeWhile(_.isDigit).toLongOption
               .exists(pid => java.lang.ProcessHandle.of(pid).isEmpty)))
-        .foreach(rm)
+        .foreach(deleteRecursively)
       df.repartition(nBuckets, keys.map(col): _*)
         .write.bucketBy(nBuckets, keys.head, keys.tail: _*)
         .sortBy(keys.head, keys.tail: _*)

@@ -53,4 +53,18 @@ class BucketingSpec extends SparkSpec {
     assert(joined.except(expected).count() == 0 &&
       expected.except(joined).count() == 0)
   }
+
+  test("bucketedTable sweeps dead builders' dirs from the session's warehouse") {
+    val warehouse = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    val deadPid = Iterator.from(4000000).find(p => java.lang.ProcessHandle.of(p).isEmpty).get
+    val stale = new java.io.File(warehouse, s"sweep_probe_${deadPid}_1")
+    new java.io.File(stale, "part-0").mkdirs()
+    stale.setLastModified(System.currentTimeMillis() - 2L * 60 * 60 * 1000)
+    val t = graft.queries.Qh.bucketedTable(spark, "sweep_probe", sf0001, 2, Seq("id")) {
+      spark.range(10).toDF("id")
+    }
+    assert(t.count() == 10)
+    assert(!stale.exists(), s"stale dir $stale survived the sweep")
+  }
 }
