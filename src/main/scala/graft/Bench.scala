@@ -468,8 +468,8 @@ object Bench {
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     val rowCounts = scala.collection.mutable.LinkedHashMap[String, Long]()
-    // generated classes each query compiled (codegen-cache misses); on a
-    // warm suite anything above 0 means the class cache is thrashing
+    // generated classes each query compiled (codegen-cache misses), read
+    // outside the timed region: how much of its time was codegen
     val compiles = scala.collection.mutable.LinkedHashMap[String, Long]()
     val attempts = scala.collection.mutable.Map[String, Int]()
     // one timed execution of `name` (R10's progress surface: row counts
