@@ -539,11 +539,14 @@ object Bench {
     // never be parsed (r02/r03 both recorded parsed=null). Humans and
     // round docs read bench_detail.json; the driver reads the compact
     // final line below.
+    val detailPath = java.nio.file.Paths.get("bench_detail.json")
     try {
       java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_detail.json"),
-        (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+        detailPath, (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } catch {
+      case e: java.io.IOException =>
+        System.err.println(s"[bench] could not write ${detailPath.toAbsolutePath}: $e")
+    }
     println(full)
 
     // Compact contract line, printed LAST: headline queries only, hard

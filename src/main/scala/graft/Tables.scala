@@ -65,6 +65,25 @@ object Tables {
 object Engine {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
+  /** Hadoop keys that route `file:` paths, for both `FileSystem` and
+    * `FileContext`, to the local filesystem in [[graft.sources]] that
+    * sets permissions and reads link status through java.nio instead of
+    * forking `chmod`/`readlink`. */
+  val localFsConf: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[graft.sources.GraftLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[graft.sources.GraftLocalFs].getName)
+
+  /** A fresh Hadoop conf carrying [[localFsConf]], for code that runs
+    * without a session's conf. Hadoop caches `FileSystem` instances by
+    * scheme, authority and user, not by conf, so a bare
+    * `new Configuration()` that creates the `file:` instance first would
+    * hand the stock class to every later caller. */
+  def hadoopConf(): org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    localFsConf.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -103,6 +122,7 @@ object Engine {
       // with headroom, for +92 MB live heap and +24 MB metaspace after
       // two full-suite passes.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config(localFsConf.map { case (k, v) => s"spark.hadoop.$k" -> v })
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 

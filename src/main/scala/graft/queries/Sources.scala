@@ -4699,7 +4699,7 @@ object MongoFixtures {
       (it: Iterator[org.apache.spark.sql.Row]) =>
         val pid = org.apache.spark.TaskContext.get().partitionId()
         val p = new HPath(f"$path/part-$pid%05d.bson")
-        val fs = FileSystem.get(p.toUri, new org.apache.hadoop.conf.Configuration())
+        val fs = FileSystem.get(p.toUri, graft.Engine.hadoopConf())
         val out = new java.io.BufferedOutputStream(fs.create(p, true))
         try it.foreach { r =>
           out.write(Bson.encode(Seq(

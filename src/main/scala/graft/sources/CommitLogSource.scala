@@ -282,7 +282,7 @@ object CommitLogSource {
 
   private def hadoopConf(): Configuration = {
     val active = SparkSession.getActiveSession
-    active.map(_.sessionState.newHadoopConf()).getOrElse(new Configuration())
+    active.map(_.sessionState.newHadoopConf()).getOrElse(graft.Engine.hadoopConf())
   }
 
   /** Shared read-only Configuration for the row-leg parquet readers
@@ -290,7 +290,7 @@ object CommitLogSource {
     * the Hadoop default XML resources once per opened FILE — pure CPU
     * overhead on many-small-batch tables. GroupReadSupport only reads
     * from it, so one instance serves every reader in the JVM. */
-  private[sources] lazy val readerConf: Configuration = new Configuration()
+  private[sources] lazy val readerConf: Configuration = graft.Engine.hadoopConf()
 
   /** Columns the reader SYNTHESIZES per row (metadata + change-feed
     * stamps) — their presence in a read schema forces the row-at-a-time

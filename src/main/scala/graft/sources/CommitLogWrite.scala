@@ -196,7 +196,7 @@ object CommitLogWrite {
     import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
     import org.apache.spark.sql.internal.SQLConf
     val conf = writerConfCache.computeIfAbsent(schema.json, _ => {
-      val c = new org.apache.hadoop.conf.Configuration()
+      val c = graft.Engine.hadoopConf()
       ParquetWriteSupport.setSchema(schema, c)
       // ParquetWriteSupport and SparkToParquetSchemaConverter read these
       // keys RAW (an unset key would NPE), so every one is pinned: the
@@ -205,7 +205,8 @@ object CommitLogWrite {
       c.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
       c.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
       c.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "true")
-      // local-scheme writes go through RawLocalFileSystem (r16): the
+      // local-scheme writes go through NioRawLocalFileSystem, the
+      // checksum-free half of the engine's local filesystem (r16): the
       // default ChecksummedFileSystem writes a .crc SIDECAR per file —
       // for a partitioned write (one file per tuple) that doubles the
       // small-file creates and re-hashes every byte. Warehouse targets
@@ -219,8 +220,7 @@ object CommitLogWrite {
       // the same name previously lived — the stale-.crc
       // ChecksumException class is unreachable while that holds. Any
       // new write site MUST keep the tagged-name discipline.
-      c.set("fs.file.impl",
-        classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+      c.set("fs.file.impl", classOf[NioRawLocalFileSystem].getName)
       c.set("fs.file.impl.disable.cache", "true")
       c
     })
@@ -1191,7 +1191,7 @@ object CommitLogWrite {
   private def fs(path: Path): FileSystem = {
     val conf = SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+      .getOrElse(graft.Engine.hadoopConf())
     FileSystem.get(path.toUri, conf)
   }
 
@@ -2851,7 +2851,7 @@ class CommitLogDataWriter(
 
   override def abort(): Unit = {
     try writerOpt.foreach(_.close()) catch { case _: Exception => () }
-    val f = FileSystem.get(tmpPath.toUri, new org.apache.hadoop.conf.Configuration())
+    val f = FileSystem.get(tmpPath.toUri, graft.Engine.hadoopConf())
     if (f.exists(tmpPath)) f.delete(tmpPath, false)
   }
 

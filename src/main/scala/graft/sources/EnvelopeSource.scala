@@ -251,10 +251,15 @@ class EnvelopeDataWriter(path: String, tmpName: String, visibleName: String)
   private val tmpPath = new Path(new Path(path), tmpName)
   private val fs = FileSystem.get(
     tmpPath.toUri, CommitLogSource.readerConf)
-  private lazy val out = {
+  // opened by the first row: a partition with no rows leaves no temp
+  // file, and publish skips a missing temp, so it makes nothing visible
+  private var out: Option[java.io.BufferedWriter] = None
+  private def writer: java.io.BufferedWriter = out.getOrElse {
     fs.mkdirs(new Path(path))
-    new java.io.BufferedWriter(
+    val w = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(fs.create(tmpPath, true), "UTF-8"))
+    out = Some(w)
+    w
   }
   private val mapper = new ObjectMapper()
   private var rows = 0L
@@ -267,18 +272,19 @@ class EnvelopeDataWriter(path: String, tmpName: String, visibleName: String)
     if (!row.isNullAt(2)) data.put("user_id", row.getLong(2))
     if (!row.isNullAt(3)) data.put("value", row.getDouble(3))
     if (!row.isNullAt(4)) node.put("source", row.getUTF8String(4).toString)
-    out.write(mapper.writeValueAsString(node))
-    out.write("\n")
+    val w = writer
+    w.write(mapper.writeValueAsString(node))
+    w.write("\n")
     rows += 1
   }
 
   override def commit(): WriterCommitMessage = {
-    out.close()
+    out.foreach(_.close())
     EnvelopeCommitMessage(tmpName, visibleName, rows)
   }
 
   override def abort(): Unit = {
-    try out.close() catch { case _: Exception => () }
+    try out.foreach(_.close()) catch { case _: Exception => () }
     if (fs.exists(tmpPath)) fs.delete(tmpPath, false)
   }
 

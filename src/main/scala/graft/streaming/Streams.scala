@@ -26,17 +26,27 @@ object Streams {
   /** Shuffle-partition count for STATEFUL STREAM runs, and the scope
     * helper that applies it around a streaming query (r16 optimization).
     *
-    * A stateful micro-batch pays a fixed per-partition cost every epoch
-    * — state store provider init, delta-file write + rename + fsync into
-    * the checkpoint, commit bookkeeping — independent of row volume.
-    * Measured at sf0.1 (Profile, t14): 32 state partitions cost ~2 s of
-    * task time per micro-batch for a 4-group aggregate; 4 partitions cut
-    * the query's wall time in half. Unlike batch shuffles (AQE coalesces
-    * small exchanges at runtime), the state partition count is LOCKED
-    * into the checkpoint at first run and AQE never applies to stateful
-    * operators, so inheriting the batch `spark.sql.shuffle.partitions`
-    * is simply the wrong default for a stream: production guidance is to
-    * size it explicitly for the query's keyspace and throughput.
+    * A stateful micro-batch pays a cost per state partition every
+    * epoch, independent of row volume: each partition's store writes a
+    * delta file into the checkpoint and renames it into place. Measured
+    * at sf0.1 (Profile, t14): 32 state partitions cost ~2 s of task time
+    * per micro-batch for a 4-group aggregate; 4 partitions cut the
+    * query's wall time in half. On the perfbench `stream_import` stream
+    * (JFR, 4-core host) most of that cost was process starts, not I/O:
+    * Hadoop's local filesystem without native libhadoop forked `chmod`
+    * for every file it created and `readlink` twice per rename, ~110
+    * forks per trigger, and state commit summed ~320 ms per trigger.
+    * The `file:` filesystem [[graft.Engine.builder]] installs
+    * (`sources/LocalFs.scala`) makes both calls through java.nio, and
+    * state commit fell to ~20 ms: that fixed cost is gone. What is left
+    * per partition is a task and a small delta file per epoch.
+    *
+    * Unlike batch shuffles (AQE coalesces small exchanges at runtime),
+    * the state partition count is LOCKED into the checkpoint at first
+    * run and AQE never applies to stateful operators, so inheriting the
+    * batch `spark.sql.shuffle.partitions` is simply the wrong default
+    * for a stream: production guidance is to size it explicitly for the
+    * query's keyspace and throughput.
     *
     * Default: min(cores, 8) — enough parallelism for the declared
     * streams' keyspaces (≤ ~dozens of groups) at any fixture scale while

@@ -110,6 +110,25 @@ class EnvelopeSourceSpec extends SparkSpec {
       "abort left files behind")
   }
 
+  test("sink writers with no rows create no file: an empty epoch publishes nothing") {
+    import graft.sources.EnvelopeStreamingWrite
+    val p = java.nio.file.Files.createTempDirectory("env_sink_empty").toString
+    val sw = new EnvelopeStreamingWrite(p)
+    val factory = sw.createStreamingWriterFactory(null)
+    val msgs = (0 until 3).map(part => factory.createWriter(part, 10L + part, 4L).commit())
+    assert(new java.io.File(p).list().isEmpty, "an empty writer opened a temp file")
+    sw.commit(4L, msgs.toArray)
+    assert(new java.io.File(p).list().isEmpty,
+      s"empty partitions published files: ${new java.io.File(p).list().toSeq}")
+    // a writer that never wrote and is aborted creates nothing either,
+    // not even the sink directory
+    val gone = new java.io.File(p, "never")
+    factory.createWriter(0, 20L, 5L).abort()
+    new EnvelopeStreamingWrite(gone.toString).createStreamingWriterFactory(null)
+      .createWriter(0, 21L, 5L).abort()
+    assert(new java.io.File(p).list().isEmpty && !gone.exists())
+  }
+
   test("COUNT(*) pushes into the source; filtered counts fall back and stay exact") {
     import spark.implicits._
     val p = java.nio.file.Files.createTempDirectory("env_cnt").toString
